@@ -34,14 +34,8 @@ object GsodPipeline {
     val (imputed, acc) = Impute.applyAll(cleaned)
     val numeric = GsodSchema.numericColumns.filter(imputed.columns.contains)
     val remaining = Clean.missingCountMap(imputed, numeric).filter(_._2 > 0).keys.toSeq.sorted
-    var cur = imputed
-    val extraAcc = scala.collection.mutable.Map.empty[String, Impute.Accounting]
-    remaining.foreach { c =>
-      val (next, a) = Impute.medianImputer(cur, c)
-      cur = next
-      extraAcc += (c -> a)
-    }
-    (cur, acc ++ extraAcc)
+    val (out, extraAcc) = Impute.applyAll(imputed, remaining.map(Impute.StationMedian(_)))
+    (out, acc ++ extraAcc)
   }
 
   /** Full run on an already-loaded GSOD-shaped frame. `gbtIter` is

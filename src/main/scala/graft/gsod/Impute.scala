@@ -9,18 +9,24 @@ import org.apache.spark.storage.StorageLevel
   * re-expressed Spark-first:
   *
   *  - the driver-collected station-median dict + Python UDF of
-  *    `MedianImputer` (ipynb c16:1-55) becomes a broadcast hash join +
-  *    `coalesce` — same values (modulo the reference's float32
-  *    round-trip, deliberately not reproduced; SURVEY §2.9/§7.5),
-  *    zero driver round-trips, no Python workers;
+  *    `MedianImputer` (ipynb c16:1-55) becomes a per-station window
+  *    median + `coalesce` to the global median — same values (modulo
+  *    the reference's float32 round-trip, deliberately not reproduced;
+  *    SURVEY §2.9/§7.5), zero driver round-trips, no Python workers;
   *  - `ProximityMedian` (ipynb c16:60-113) keeps the reference's exact
   *    control flow — progressive ±k ROWS-frame widening where iteration
   *    k=14 only fills rows still null after k=7 (SURVEY §7.4.2) — but
   *    persists each iteration so the lineage doesn't re-execute
   *    (SURVEY §4.3.1/.6);
-  *  - `SeasonalMedian` (ipynb c16:116-155) is a per-(stn, month) median
-  *    broadcast join + conditional fill with a recursive
-  *    `ProximityMedian` fallback.
+  *  - `SeasonalMedian` (ipynb c16:116-155) is a per-(stn, month) window
+  *    median + conditional fill with a recursive `ProximityMedian`
+  *    fallback.
+  *
+  * No operator re-attaches an aggregate of the frame to the frame
+  * itself: the median windows partition by station like the proximity
+  * windows, so the plan stays one linear chain per strategy. Rows with
+  * a null key form one median group of their own (GSOD's `stn` and
+  * `date` are non-nullable, GsodSchema).
   *
   * Every operator is a pure DataFrame→DataFrame function; the
   * per-stage fill accounting the reference prints (ipynb c18:out) is
@@ -46,34 +52,30 @@ object Impute {
     * for all-null stations (ipynb c16:26-30 / c16:37 `dict.get`
     * fallback).
     *
-    * Scale: the per-station median table is bounded by |stations| (~12k
-    * for GSOD), broadcast to every executor; the probe side never
-    * shuffles. The global median is a scalar action on an aggregate —
-    * one extra job, not a per-station loop (SURVEY §4.3.3). */
+    * Scale: the station median is a window aggregate partitioned by
+    * `keyCol` — one sort within the station partitioning, no derived
+    * median table. The null count and the global median come from
+    * one aggregate job, not a per-station loop (SURVEY §4.3.3). */
   def medianImputer(df: DataFrame, column: String,
       keyCol: String = "stn", float32Parity: Boolean = false): (DataFrame, Accounting) = {
-    val before = nullCount(df, column)
+    val stats = df.agg(count(when(col(column).isNull, 1)), median(col(column))).head()
+    val before = stats.getLong(0)
     if (before == 0) return (df, Seq("station-median" -> 0L))
-    val medianRow = df.agg(median(col(column))).head()
-    if (medianRow.isNullAt(0)) {
+    if (stats.isNullAt(1)) {
       // column is entirely null — nothing to impute from
       return (df, Seq("station-median" -> before))
     }
-    val globalMedian = medianRow.getDouble(0)
-    val stationMedians = df.groupBy(col(keyCol).as("sm_stn"))
-      .agg(median(col(column)).as("sm_median"))
     // The reference's Python UDF returns FloatType, so its imputed
     // values pass through a float32 round-trip before landing in the
     // double column (SURVEY §2.9). We keep doubles by default;
     // float32Parity reproduces the truncation bit-exactly.
     val fillValue = {
-      val fill = coalesce(col("sm_median"), lit(globalMedian))
+      val fill = coalesce(median(col(column)).over(Window.partitionBy(col(keyCol))),
+        lit(stats.getDouble(1)))
       if (float32Parity) fill.cast("float").cast("double") else fill
     }
-    val out = df.join(broadcast(stationMedians), df(keyCol) === col("sm_stn"), "left_outer")
-      .withColumn(column,
-        when(col(column).isNull, fillValue).otherwise(col(column)))
-      .drop("sm_stn", "sm_median")
+    val out = df.withColumn(column,
+      when(col(column).isNull, fillValue).otherwise(col(column)))
     (out, Seq("station-median" -> nullCount(out, column)))
   }
 
@@ -130,11 +132,7 @@ object Impute {
           if (row.isNullAt(0)) None else Some(row.getDouble(0))
       }
       fb.foreach { v =>
-        val filled = cur.withColumn(column,
-          when(col(column).isNull, lit(v)).otherwise(col(column)))
-        curPersisted.foreach(_.unpersist(false))
-        curPersisted = None
-        cur = filled
+        cur = cur.withColumn(column, when(col(column).isNull, lit(v)).otherwise(col(column)))
       }
       acc += (s"fallback-$fallbackStrategy" -> nullCount(cur, column))
     }
@@ -143,37 +141,32 @@ object Impute {
 
   /** Seasonal-median imputer (ipynb c16:116-155
     * `ImputeTempWithSeasonalMedian`): per-(station, calendar month)
-    * exact median, broadcast-joined back on (stn, month(date)) — the
-    * reference's only join (J1, ipynb c16:138) — with qualified
-    * duplicate-column cleanup (SURVEY §7.4.4: both sides aliased) and a
-    * recursive ProximityMedian fallback for station-months whose median
-    * is null (ipynb c16:150-153).
+    * exact median as a window aggregate over the same frame — where the
+    * reference merges a median table back in on (stn, month(date)) (J1,
+    * ipynb c16:138) and has to disambiguate the duplicated columns
+    * (SURVEY §7.4.4) — and a recursive ProximityMedian fallback for
+    * station-months whose median is null (ipynb c16:150-153).
     *
-    * Scale: build side is |stations|×12 regardless of fact size →
-    * always broadcastable; probe side unshuffled. */
+    * Scale: the window partitions by station first, so it reuses the
+    * station partitioning the proximity windows already established. */
   def seasonalMedian(df: DataFrame, column: String,
       initialNumDays: Int = 7, maxDays: Int = 31): (DataFrame, Accounting) = {
     val before = nullCount(df, column)
     if (before == 0) return (df, Seq("seasonal-median" -> 0L))
 
-    val medians = df.groupBy(col("stn").as("sm_stn"), month(col("date")).as("sm_mo"))
-      .agg(median(col(column)).as("sm_median"))
-    val joined = df.join(broadcast(medians),
-        df("stn") === col("sm_stn") && month(df("date")) === col("sm_mo"),
-        "left_outer")
-      .withColumn(column,
-        when(col(column).isNull, col("sm_median")).otherwise(col(column)))
-      .drop("sm_stn", "sm_mo", "sm_median")
+    val seasonal = median(col(column)).over(Window.partitionBy(col("stn"), month(col("date"))))
+    val filled = df.withColumn(column,
+        when(col(column).isNull, seasonal).otherwise(col(column)))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val afterSeasonal = nullCount(joined, column)
+    val afterSeasonal = nullCount(filled, column)
     val acc = scala.collection.mutable.ListBuffer[(String, Long)]("seasonal-median" -> afterSeasonal)
     val out =
       if (afterSeasonal > 0) {
-        val (fixed, proxAcc) = proximityMedian(joined, column, initialNumDays, maxDays, "median")
+        val (fixed, proxAcc) = proximityMedian(filled, column, initialNumDays, maxDays, "median")
         acc ++= proxAcc
         fixed
-      } else joined
+      } else filled
     (out, acc.toList)
   }
 

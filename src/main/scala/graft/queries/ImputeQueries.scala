@@ -53,9 +53,9 @@ object ImputeQueries {
       |ORDER BY event_id""".stripMargin
 
   /** MedianImputer (ipynb c16:1-55) over per-user groups: fill with the
-    * user's median, global median for all-null users — as a broadcast
-    * join + coalesce, not the reference's driver dict + Python UDF
-    * (SURVEY §2.9 X3). */
+    * user's median, global median for all-null users — as a per-user
+    * window median + coalesce, not the reference's driver dict + Python
+    * UDF (SURVEY §2.9 X3). */
   def qImputeStationMedian(s: SparkSession, d: String): DataFrame = {
     val (out, _) = Impute.medianImputer(cleanedEvents(s, d), "v", keyCol = "user_id")
     out.select(col("event_id"), col("user_id"), col("v").as("v_imputed"))

@@ -309,4 +309,12 @@ class PlanSpec extends SparkSpec {
       l.contains("partial_count") || l.contains("partial count"))
     assert(partials >= 2, s"expected two partial-aggregated stages:\n$p")
   }
+
+  test("gsod prepare: imputation re-attaches no aggregate — the prepared frame's plan has no Join") {
+    val prepared = graft.gsod.GsodPipeline.prepare(graft.gsod.Fixture.df(spark))._1
+    val joins = prepared.queryExecution.analyzed.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.joinType
+    }
+    assert(joins.isEmpty, s"self-joins in the prepared frame's lineage: $joins")
+  }
 }

@@ -70,6 +70,15 @@ class ProximityMedianSpec extends SparkSpec {
     assert(acc.last._2 == 0)
   }
 
+  test("scalar fallback builds on the cached last iteration, not a replay of the widening") {
+    val df = Fixture.tiny(spark,
+      Seq[java.lang.Double](2.0, null, null, null, null, null, 4.0))
+    val (out, acc) = Impute.proximityMedian(df, "v", 1, 1, "median")
+    assert(acc.map(_._1) == Seq("proximity±1", "fallback-median"))
+    val p = out.queryExecution.executedPlan.toString
+    assert(p.contains("InMemoryTableScan"), s"fallback output no longer reads the cache:\n$p")
+  }
+
   test("mean fallback uses the global mean") {
     val df = Fixture.tiny(spark,
       Seq[java.lang.Double](2.0, null, null, null, null, null, 4.0))
