@@ -8,15 +8,22 @@ import org.apache.spark.sql.functions._
 
 /** Featurization stage (SURVEY.md §2.6 W1 + §2.10 M1–M5): next-row
   * labels via `lead`, then the reference's ML feature pipeline as ONE
-  * `org.apache.spark.ml.Pipeline` (the reference fits six separate
-  * indexers eagerly, ipynb c23:2-6; a single Pipeline defers everything
-  * to one `fit`).
+  * `org.apache.spark.ml.Pipeline`. The reference fits six separate
+  * indexers eagerly (ipynb c23:2-6); here one multi-column
+  * `StringIndexer` counts every categorical column in a single pass, so
+  * the whole pipeline is one `fit` with one indexer pass.
   *
   * Reference-faithful details:
   *  - `lead(…, 1)` over `partitionBy(stn).orderBy(date)` — next ROW,
   *    not next calendar day (ipynb c24:2-8; SURVEY §7.4.1);
   *  - label-null rows dropped after the window (ipynb c24:11);
-  *  - OneHotEncoder keeps `dropLast=true` default (ipynb c23:5-6);
+  *  - StringIndexer keeps the reference's default `handleInvalid`
+  *    ("error", ipynb c23:2-4): no `__unknown` label, so with
+  *    OneHotEncoder's default `dropLast=true` (ipynb c23:5-6) a 0/1
+  *    indicator encodes to ONE slot and the design matrix stays full
+  *    rank next to the intercept (LR solves by Cholesky). A null
+  *    indicator raises Spark's "StringIndexer encountered NULL value",
+  *    as in the reference;
   *  - StandardScaler `withMean=false, withStd=true` defaults
   *    (ipynb c26:2-3 — scale-only, no centering);
   *  - final assembly order: categorical vectors FIRST, then the scaled
@@ -38,14 +45,12 @@ object Features {
 
   /** The M1–M5 stages as a single Pipeline over the given columns. */
   def pipeline(numericCols: Seq[String], categoricalCols: Seq[String]): Pipeline = {
-    val indexers = categoricalCols.map { c =>
-      new StringIndexer()
-        .setInputCol(c).setOutputCol(s"${c}_index")
-        .setStringOrderType("frequencyDesc")
-        .setHandleInvalid("keep")
-    }
+    val indexed = categoricalCols.map(c => s"${c}_index").toArray
+    val indexer = new StringIndexer()
+      .setInputCols(categoricalCols.toArray).setOutputCols(indexed)
+      .setStringOrderType("frequencyDesc")
     val encoder = new OneHotEncoder()
-      .setInputCols(categoricalCols.map(c => s"${c}_index").toArray)
+      .setInputCols(indexed)
       .setOutputCols(categoricalCols.map(c => s"${c}_vec").toArray)
     val numAssembler = new VectorAssembler()
       .setInputCols(numericCols.toArray)
@@ -56,8 +61,7 @@ object Features {
     val finalAssembler = new VectorAssembler()
       .setInputCols((categoricalCols.map(c => s"${c}_vec") :+ "scaled_numerical_features").toArray)
       .setOutputCol("features")
-    new Pipeline().setStages(
-      (indexers :+ encoder :+ numAssembler :+ scaler :+ finalAssembler).toArray)
+    new Pipeline().setStages(Array(indexer, encoder, numAssembler, scaler, finalAssembler))
   }
 
   /** Full featurize: lead labels → fit pipeline → transform. `max`

@@ -1,8 +1,12 @@
 package graft.gsod
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.{ListenerBusDrain, SparkException}
 import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.bench.GsodBench
 
 class FeaturesSpec extends SparkSpec {
 
@@ -48,6 +52,60 @@ class FeaturesSpec extends SparkSpec {
       assert(v(0) == 0.0)
     }
   }
+
+  /** 20 stations x 365 days, prepared: every indicator takes both 0 and 1. */
+  lazy val benchPrepared: org.apache.spark.sql.DataFrame =
+    GsodPipeline.prepare(GsodBench.generate(spark, 20, 365))._1
+
+  test("each 0/1 indicator encodes to one slot (default indexer, dropLast): no phantom label") {
+    val (out, _) = Features.featurize(benchPrepared)
+    val row = out.head()
+    GsodSchema.categoricalColumns.foreach { c =>
+      val levels = benchPrepared.select(c).distinct().collect().map(_.getInt(0)).sorted.toSeq
+      assert(levels == Seq(0, 1), s"$c levels")
+      assert(row.getAs[Vector](s"${c}_vec").size == 1, s"${c}_vec")
+    }
+    assert(row.getAs[Vector]("features").size ==
+      GsodSchema.categoricalColumns.size + GsodSchema.numericColumns.size)
+  }
+
+  test("a null indicator fails with StringIndexer's NULL error, as in the reference") {
+    // `fog` is not a label source, so addLeadLabels keeps its null rows
+    val withNull = imputed.withColumn("fog",
+      when(col("stn") === "010010", lit(null).cast("int")).otherwise(dayofmonth(col("date")) % 2))
+    val e = intercept[SparkException] {
+      Features.featurize(withNull)._1.select("features").collect()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains("StringIndexer encountered NULL value")),
+      e.getMessage)
+  }
+
+  test("featurize starts at most 10 Spark jobs (fit + one noop write): one indexer pass for all indicators") {
+    // Six single-column indexer fits started 21 jobs here; one
+    // multi-column fit starts 6.
+    val frame = benchPrepared.persist()
+    frame.count()
+    val group = "features-job-count"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "Features.featurize")
+      try Features.featurize(frame)._1.write.format("noop").mode("overwrite").save()
+      finally sc.clearJobGroup()
+      ListenerBusDrain(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      frame.unpersist()
+    }
+    assert(jobs.get > 0 && jobs.get <= 10, s"featurize jobs: ${jobs.get}")
+  }
 }
 
 class TrainSpec extends SparkSpec {
@@ -79,17 +137,29 @@ class TrainSpec extends SparkSpec {
       .subsetOf(result.imputeAccounting.keySet))
   }
 
+  /** LR on the 20-station year: the test half and the fitted model. */
+  lazy val benchLr: (org.apache.spark.sql.DataFrame, org.apache.spark.ml.regression.LinearRegressionModel) = {
+    val (imputed, _) = GsodPipeline.prepare(GsodBench.generate(spark, 20, 365))
+    val (featurized, _) = Features.featurize(imputed)
+    val (tr, te) = Train.split(featurized)
+    (te, Train.linearRegression(tr))
+  }
+
   test("GsodBench generator plants learnable signal: LR recovers R2 >= 0.8 (reference band ~0.93)") {
     // 20 stations x 365 days: full seasonal cycle, station offsets, iid
     // noise — the same generator GsodBench times at 4M rows, so this
     // floor is the fixture-scale evidence behind the BASELINE.md
     // model-quality row.
-    val raw = graft.bench.GsodBench.generate(spark, 20, 365)
-    val (imputed, _) = GsodPipeline.prepare(raw)
-    val (featurized, _) = Features.featurize(imputed)
-    val (tr, te) = Train.split(featurized)
-    val m = Train.evaluateRegression(Train.linearRegression(tr).transform(te))
+    val (te, lr) = benchLr
+    val m = Train.evaluateRegression(lr.transform(te))
     assert(m.r2 >= 0.8, s"lr_r2=${m.r2}")
+  }
+
+  test("LR solves the full-rank design by Cholesky: no L-BFGS fallback, standard errors available") {
+    val (_, lr) = benchLr
+    assert(lr.summary.totalIterations == 0)
+    val se = lr.summary.coefficientStandardErrors
+    assert(se.length == lr.coefficients.size + 1 && se.forall(s => !s.isNaN && s > 0), se.toSeq)
   }
 
   test("prepare leaves zero nulls in all numeric columns (ipynb c20:out)") {
