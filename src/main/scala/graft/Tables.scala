@@ -35,6 +35,13 @@ import org.apache.spark.sql.types._
   * `lineitem.l_shipdate` / `orders.o_orderdate` stay TIMESTAMP_NTZ
   * (their natural load type; hash-green in r9 for queries that project
   * them raw, e.g. SCD2).
+  *
+  * == Schema memo ==
+  * Every load goes through [[parquet]], which infers a path's schema on
+  * its first read in the process and reads with that schema after, so
+  * a query pays no parquet footer-read job per call. This cannot hide
+  * drift: tables are regenerated only between processes, and [[canon]]
+  * still runs on every load.
   */
 object Tables {
   /** Expected column name → canonical Spark type. `null` means "any
@@ -128,8 +135,27 @@ object Tables {
     // No-op for micros files; lets a TIMESTAMP(NANOS) regeneration load
     // as a long (which `canon` then converts) instead of erroring.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    canon(name, spark.read.parquet(s"$sfDir/$name.parquet"))
+    canon(name, parquet(spark, s"$sfDir/$name.parquet"))
   }
+
+  // path -> schema inferred on this path's first read in this process
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]
+
+  /** `spark.read.parquet(path)` that infers the schema once per path
+    * per process. Inferring a parquet schema reads the footer in a
+    * one-task Spark job, paid by every plain `spark.read.parquet`;
+    * reading with the memoized `.schema(…)` skips it, so a query that
+    * reloads the same tables pays no footer job after the first call.
+    *
+    * Safe because nothing this process reads through it changes shape
+    * while the process runs: the harness tables are regenerated only
+    * between processes (see Drift-proofing — [[canon]] still checks
+    * every load), and the curation state of
+    * [[graft.queries.DedupQueries]] lives under a fresh
+    * [[graft.TempDirs]] directory written once per process. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemas.computeIfAbsent(path, p => spark.read.parquet(p).schema))
+      .parquet(path)
 
   def events(s: SparkSession, d: String): DataFrame    = load(s, d, "events")
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

@@ -206,8 +206,9 @@ object ExplainDump {
     val exact = qualityCp.join(keepers, Seq("doc_id"), "left_semi")
     val exactCp = exact.localCheckpoint(true)
     val pairs = Dedup.ngramJaccardPairs(exactCp)
-    val edgesCp = Dedup.canonicalEdges(pairs).localCheckpoint(true)
-    val round = Dedup.ccRound(edgesCp)
+    // connectedComponents' one pair cut, then its loop edges (s < b)
+    val canonCp = Dedup.canonicalEdges(pairs).localCheckpoint(true)
+    val round = Dedup.ccRound(canonCp.filter(col("s") =!= col("b")))
     val nonKeepers = round.localCheckpoint(true).select(col("b").as("doc_id"))
     val survivors = exactCp.join(nonKeepers, Seq("doc_id"), "left_anti")
     Seq(
@@ -219,8 +220,13 @@ object ExplainDump {
   }
 
   /** Same for the incremental pipeline: the delta-vs-state stages of
-    * [[graft.text.Curation.incrementalCurate]], state read from the
-    * same parquet layout the query persists. */
+    * the core that [[graft.text.Curation.incrementalCurate]] and
+    * [[graft.text.Curation.incrementalSurvivors]] share (the registered
+    * query calls the latter), over the day-1 state of
+    * [[graft.text.Curation.curateSketch]]. The stages after the pairs —
+    * the connectedComponents cut and round, the keeper rule — are the
+    * q_curation dumps' stages 4–5; the state append is not dumped,
+    * since the query does not run it. */
   def incrementalStages(spark: SparkSession, sf: String): Seq[(String, DataFrame)] = {
     import graft.queries.DedupQueries
     import graft.text.{Curation, Dedup, TextAnalysis}

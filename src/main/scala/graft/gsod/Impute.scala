@@ -69,7 +69,9 @@ object Impute {
     * Scale: the station median is a window aggregate partitioned by
     * `keyCol` — one sort within the station partitioning, no derived
     * median table. Every column's null count and global median come
-    * from one aggregate job, not a per-station loop (SURVEY §4.3.3). */
+    * from one aggregate job, not a per-station loop (SURVEY §4.3.3);
+    * a filled column's post-fill count is 0 by construction, so no
+    * second job counts it. */
   def medianImputer(df: DataFrame, column: String,
       keyCol: String = "stn", float32Parity: Boolean = false): (DataFrame, Accounting) =
     one(stationMedians(df, Seq(column), keyCol, float32Parity), column)
@@ -90,7 +92,9 @@ object Impute {
       val fill = coalesce(median(col(c)).over(Window.partitionBy(col(keyCol))), lit(global(c)))
       c -> when(col(c).isNull, if (float32Parity) fill.cast("float").cast("double") else fill).otherwise(col(c))
     }.toMap)
-    val after = if (gaps.isEmpty) before else before ++ nullCounts(out, gaps)
+    // every gap's fill ends in a non-null global-median literal, so no
+    // null survives in it: no count job is needed to learn that
+    val after = before ++ gaps.map(_ -> 0L)
     (out, after.map { case (c, n) => c -> Seq("station-median" -> n) })
   }
 

@@ -392,7 +392,13 @@ object DedupQueries {
     * state. History is never re-scanned. Emits the delta survivors'
     * ids — rows-only for the driver (the minhash stage isn't
     * SQL-expressible); CurationSpec proves equality with the
-    * from-scratch sketch pipeline restricted to the delta. */
+    * from-scratch sketch pipeline restricted to the delta.
+    *
+    * Only the survivors are read, so the query calls
+    * `Curation.incrementalSurvivors` — the same survivors without the
+    * state append `incrementalCurate` would cut and this query would
+    * discard — and reloads the state through `Tables.parquet`, whose
+    * schema memo spares each call the three footer-read jobs. */
   // single-flight day-1 state build shared by the incremental query and
   // its bounds gate (the gate's scratch leg needs only the artifact, so
   // hoisting this lets the two legs run concurrently)
@@ -412,10 +418,10 @@ object DedupQueries {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val dir = curationStateDir(docs, d)
     val state = graft.text.Curation.SketchState(
-      s.read.parquet(s"$dir/digests"),
-      s.read.parquet(s"$dir/bands"),
-      s.read.parquet(s"$dir/sets"))
-    graft.text.Curation.incrementalCurate(state, curationDelta(docs),
+      Tables.parquet(s, s"$dir/digests"),
+      Tables.parquet(s, s"$dir/bands"),
+      Tables.parquet(s, s"$dir/sets"))
+    graft.text.Curation.incrementalSurvivors(state, curationDelta(docs),
         CurationMinQuality, withAccounting = false)
       .survivors
       .select(col("doc_id"))
@@ -428,7 +434,7 @@ object DedupQueries {
     * genuinely NEW content (shingles are order-sensitive), the rows
     * that must SURVIVE. Shared by the registered query and its
     * equivalence-bounds oracle row. */
-  private def curationDelta(docs: DataFrame): DataFrame = {
+  private[graft] def curationDelta(docs: DataFrame): DataFrame = {
     val perturbed = docs.select((col("doc_id") + 2 * IdOffset).as("doc_id"),
       concat_ws(" ", slice(Dedup.tokens(col("text")), 2, 100000)).as("text"))
     val reversed = docs.select((col("doc_id") + 4 * IdOffset).as("doc_id"),

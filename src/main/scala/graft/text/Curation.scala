@@ -1,6 +1,7 @@
 package graft.text
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -35,6 +36,18 @@ import org.apache.spark.storage.StorageLevel
   * cache (quality, exact, and the ngram pipeline's internal persists)
   * be RELEASED before returning — repeated `curate` calls in a
   * long-lived session leak nothing.
+  *
+  * The incremental core (quality → exact dedup against the state's
+  * digests → MinHash pairs against its band index → components →
+  * keeper rule) makes three cuts per delta: the quality frame, the
+  * canonical pairs inside [[Dedup.connectedComponents]], and the
+  * survivors; `fresh` and the delta's signature cache are persisted
+  * and released before the entry point returns. Which entry point
+  * appends state: [[incrementalCurate]] and the folds built on it
+  * ([[screenedIncrementalCurate]], [[incrementalRelease]]) return the
+  * UPDATED [[SketchState]], paying two more eager cuts (the survivors'
+  * slice of the delta's bands and sets); [[incrementalSurvivors]]
+  * returns the survivors alone and makes neither.
   */
 object Curation {
 
@@ -200,6 +213,23 @@ object Curation {
       acc)
   }
 
+  /** [[incrementalCurate]]'s survivors and accounting WITHOUT the state
+    * append — for a caller that reads only the survivors (the
+    * registered q_curation_incremental query): the two eager
+    * semi-join cuts of the delta's bands and sets are skipped, and the
+    * delta's signature cache is released before returning. The
+    * survivors are the same frame [[incrementalCurate]] returns. */
+  def incrementalSurvivors(state: SketchState, delta: DataFrame,
+      minQuality: Double, k: Int = 3, maxJaccardDist: Double = 0.2,
+      textCol: String = "text", idCol: String = "doc_id",
+      withAccounting: Boolean = true): Result = {
+    val (survivors, _, _, mhHandle, acc) = incrementalCurateCore(
+      state, delta, minQuality, k, maxJaccardDist, textCol, idCol,
+      withAccounting)
+    mhHandle.unpersist()
+    Result(survivors, acc)
+  }
+
   /** The shared tail of the fold members: append `survivors`' slice of
     * the delta index to the persisted state. The slices are eagerly
     * cut so the delta's signature cache releases per increment — the
@@ -266,12 +296,16 @@ object Curation {
       .withColumnRenamed("doc_id", idCol)
       .join(fresh.select(col(idCol)).withColumn("_delta", lit(1)),
         Seq(idCol), "left")
-    val byComp = comp.groupBy(col("component")).agg(
-      max(when(col("_delta").isNull, 1).otherwise(0)).as("_has_hist"),
-      min(when(col("_delta") === 1, col(idCol))).as("_min_delta"))
-    val deltaNonKeepers = comp.filter(col("_delta") === 1)
-      .join(byComp, Seq("component"))
-      .filter(col("_has_hist") === 1 || col(idCol) =!= col("_min_delta"))
+    // per-component flags as window aggregates: one exchange on
+    // component and no join back to `comp`
+    val byComp = Window.partitionBy(col("component"))
+    val deltaNonKeepers = comp
+      .withColumn("_has_hist",
+        max(when(col("_delta").isNull, 1).otherwise(0)).over(byComp))
+      .withColumn("_min_delta",
+        min(when(col("_delta") === 1, col(idCol))).over(byComp))
+      .filter(col("_delta") === 1 &&
+        (col("_has_hist") === 1 || col(idCol) =!= col("_min_delta")))
       .select(col(idCol))
     val survivors = fresh.join(deltaNonKeepers, Seq(idCol), "left_anti")
       .localCheckpoint(true)

@@ -362,6 +362,48 @@ object Dedup {
     (pairs, Seq(docSets, byDoc) ++ dfHandles)
   }
 
+  /** One large-star + small-star round over a canonical (s < b) edge
+    * set — the loop body of [[connectedComponents]], also dumped
+    * standalone by ExplainDump (the per-round `localCheckpoint`
+    * otherwise hides the round's operators behind a Scan ExistingRDD
+    * in any plan printed from the converged result). */
+  private[graft] def ccRound(edges: DataFrame): DataFrame = {
+    // large-star: for canonical (s, b) the only v > u case is u = s,
+    // v = b, but the neighborhood minimum must see BOTH directions.
+    val sym = edges.select(col("s").as("u"), col("b").as("v"))
+      .union(edges.select(col("b").as("u"), col("s").as("v")))
+    val uMin = sym.groupBy(col("u"))
+      .agg(min(col("v")).as("mn"))
+      .select(col("u"), least(col("mn"), col("u")).as("m"))
+    // no distinct here: duplicate (m, v) rows (same attachment reached
+    // through different u) don't change small-star's min and are
+    // collapsed by the round-final distinct — saves a shuffle/round
+    val large = sym.filter(col("v") > col("u"))
+      .join(uMin, Seq("u"))
+      .select(col("m").as("s"), col("v").as("b"))  // m <= u < v
+      .filter(col("s") =!= col("b"))
+    // small-star on the large-star output: orient big → small.
+    val oriented = large.select(col("b").as("u"), col("s").as("v")) // v < u
+    val oMin = oriented.groupBy(col("u")).agg(min(col("v")).as("m"))
+    oriented.join(oMin, Seq("u"))
+      .filter(col("v") =!= col("m"))
+      .select(col("m").as("s"), col("v").as("b"))  // m = min(Γ<(u)) < v
+      .union(oMin.select(col("m").as("s"), col("u").as("b")))     // m < u
+      .distinct()
+  }
+
+  /** Canonical undirected (s <= b) pair set of a pair frame, self-loops
+    * kept so a vertex seen only in a self-loop is still labelled — the
+    * one eager cut of [[connectedComponents]] (the loop reads its s < b
+    * edges, the final labelling its vertices), exposed for the stage
+    * plan dump. */
+  private[graft] def canonicalEdges(pairs: DataFrame, idACol: String = "id_a",
+      idBCol: String = "id_b"): DataFrame =
+    pairs
+      .select(least(col(idACol), col(idBCol)).as("s"),
+        greatest(col(idACol), col(idBCol)).as("b"))
+      .distinct()
+
   /** Connected components over a near-dup pair list: each document is
     * labeled with the smallest doc id reachable through duplicate
     * edges — the "cluster keeper" every training-data dedup pipeline
@@ -400,54 +442,21 @@ object Dedup {
     * round, a measured 1.46× on q_dedup_clusters; and unlike a
     * round-over-round fingerprint compare, the structural test needs
     * no redundant confirmation round.
+    *
+    * The pair pipeline under `pairs` is cut ONCE, as its canonical
+    * (least, greatest) pairs ([[canonicalEdges]]); the loop's edges and
+    * the labelled vertex set are both derived from that cut.
     * Returns (doc_id, component); only vertices present in `pairs`
-    * appear (absent docs are trivially their own keeper). */
-  /** One large-star + small-star round over a canonical (s < b) edge
-    * set — the loop body of [[connectedComponents]], also dumped
-    * standalone by ExplainDump (the per-round `localCheckpoint`
-    * otherwise hides the round's operators behind a Scan ExistingRDD
-    * in any plan printed from the converged result). */
-  private[graft] def ccRound(edges: DataFrame): DataFrame = {
-    // large-star: for canonical (s, b) the only v > u case is u = s,
-    // v = b, but the neighborhood minimum must see BOTH directions.
-    val sym = edges.select(col("s").as("u"), col("b").as("v"))
-      .union(edges.select(col("b").as("u"), col("s").as("v")))
-    val uMin = sym.groupBy(col("u"))
-      .agg(min(col("v")).as("mn"))
-      .select(col("u"), least(col("mn"), col("u")).as("m"))
-    // no distinct here: duplicate (m, v) rows (same attachment reached
-    // through different u) don't change small-star's min and are
-    // collapsed by the round-final distinct — saves a shuffle/round
-    val large = sym.filter(col("v") > col("u"))
-      .join(uMin, Seq("u"))
-      .select(col("m").as("s"), col("v").as("b"))  // m <= u < v
-      .filter(col("s") =!= col("b"))
-    // small-star on the large-star output: orient big → small.
-    val oriented = large.select(col("b").as("u"), col("s").as("v")) // v < u
-    val oMin = oriented.groupBy(col("u")).agg(min(col("v")).as("m"))
-    oriented.join(oMin, Seq("u"))
-      .filter(col("v") =!= col("m"))
-      .select(col("m").as("s"), col("v").as("b"))  // m = min(Γ<(u)) < v
-      .union(oMin.select(col("m").as("s"), col("u").as("b")))     // m < u
-      .distinct()
-  }
-
-  /** Canonical undirected (s < b) edge set of a pair frame — the CC
-    * loop's input normalization, exposed for the stage plan dump. */
-  private[graft] def canonicalEdges(pairs: DataFrame, idACol: String = "id_a",
-      idBCol: String = "id_b"): DataFrame =
-    pairs
-      .select(least(col(idACol), col(idBCol)).as("s"),
-        greatest(col(idACol), col(idBCol)).as("b"))
-      .filter(col("s") =!= col("b"))
-      .distinct()
-
+    * appear (absent docs are trivially their own keeper), a vertex
+    * seen only in a self-loop labelled as itself. */
   def connectedComponents(pairs: DataFrame, idACol: String = "id_a",
       idBCol: String = "id_b", maxIter: Int = 20): DataFrame = {
-    val verts = pairs.select(explode(array(col(idACol), col(idBCol))).as("doc_id"))
+    // ONE eager cut of the pair pipeline, read by both the loop's edges
+    // and the final labelling's vertex set, so the work under `pairs`
+    // (band join, distinct, verify) runs once
+    val canon = canonicalEdges(pairs, idACol, idBCol).localCheckpoint(true)
+    val verts = canon.select(explode(array(col("s"), col("b"))).as("doc_id"))
       .distinct()
-      .localCheckpoint(true)
-    // canonical undirected edge set (s < b), self-loops dropped
     // star forest ⇔ fixpoint of the large/small-star round: roots never
     // appear as members, and each member is attached to exactly one root
     def isStarForest(e: DataFrame): Boolean =
@@ -457,7 +466,7 @@ object Dedup {
         .agg(sum(col("n_root")).as("n_root"), sum(col("n_member")).as("n_member"))
         .filter(col("n_member") > 1 || (col("n_root") > 0 && col("n_member") > 0))
         .isEmpty
-    // localCheckpoint(eager = false) everywhere in the loop: the
+    // localCheckpoint(eager = false) for every round: the
     // structural convergence check is the materializing action (its
     // groupBy shuffle computes every input partition, and the job-end
     // doCheckpoint caches them + truncates lineage), so each round
@@ -467,8 +476,9 @@ object Dedup {
     // compare, the structural test also needs NO redundant
     // confirmation round: it detects the star forest the moment a
     // round produces it (q_dedup_clusters converges in 1 round, not 2).
-    var edges = canonicalEdges(pairs, idACol, idBCol)
-      .localCheckpoint(false)
+    // the loop's edges (s < b, self-loops dropped): a narrow filter
+    // over the cut, so round 1 reads checkpoint blocks
+    var edges = canon.filter(col("s") =!= col("b"))
     // No upfront structural check: real pair graphs are never already
     // star forests, so the check would be a pure extra job; if the
     // input IS one, round 1 is an identity round and the fused check

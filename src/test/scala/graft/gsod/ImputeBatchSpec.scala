@@ -1,9 +1,7 @@
 package graft.gsod
 
 import java.time.LocalDate
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.JobCount
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import graft.SparkSpec
@@ -81,6 +79,18 @@ class ImputeBatchSpec extends SparkSpec {
     assertSameAsFold(Seq("a", "c", "e", "f").map(StationMedian(_)) :+ Zero("b") :+ Zero("d"))
   }
 
+  test("station-median accounting, read from the stats row, equals the counted nulls after the fill") {
+    val cleaned = Clean.sentinelToNull(Fixture.df(spark))
+    val fixtureCols = cleaned.schema.fields.collect { case f if f.dataType == DoubleType => f.name }.toSeq
+    // `frame`'s `e` is entirely null: no median to fill from, so it keeps its count
+    Seq(cleaned -> fixtureCols, frame -> Seq("a", "b", "c", "d", "e", "f")).foreach { case (df, cols) =>
+      val (out, acc) = applyAll(df, cols.map(StationMedian(_)))
+      val counted = Clean.missingCountMap(out, cols)
+      assert(acc == cols.map(c => c -> Seq("station-median" -> counted(c))).toMap)
+    }
+    assert(applyAll(frame, Seq(StationMedian("e")))._2("e") == Seq("station-median" -> 80L))
+  }
+
   test("a non-positive initial window is rejected, not widened forever") {
     val df = Fixture.tiny(spark, Seq[java.lang.Double](1.0, null, 3.0))
     Seq(0, -1).foreach { k =>
@@ -90,23 +100,11 @@ class ImputeBatchSpec extends SparkSpec {
 
   test("prepare starts at most 18 Spark jobs (prepare + one noop write): one batch per strategy kind") {
     // Each strategy once per column, with a persist and count per ±k
-    // step, started 36 jobs here; the chained-step batches start 14.
+    // step, started 36 jobs here; the chained-step batches start 12.
     val raw = GsodBench.generate(spark, 20, 365)
-    val group = "prepare-job-count"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+    val jobs = JobCount(spark.sparkContext, "prepare-job-count") {
+      GsodPipeline.prepare(raw)._1.write.format("noop").mode("overwrite").save()
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "GsodPipeline.prepare")
-      try GsodPipeline.prepare(raw)._1.write.format("noop").mode("overwrite").save()
-      finally sc.clearJobGroup()
-      ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get > 0 && jobs.get <= 18, s"prepare jobs: ${jobs.get}")
+    assert(jobs > 0 && jobs <= 18, s"prepare jobs: $jobs")
   }
 }

@@ -1,9 +1,7 @@
 package graft.gsod
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.{ListenerBusDrain, SparkException}
+import org.apache.spark.{JobCount, SparkException}
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.bench.GsodBench
@@ -86,25 +84,11 @@ class FeaturesSpec extends SparkSpec {
     // multi-column fit starts 6.
     val frame = benchPrepared.persist()
     frame.count()
-    val group = "features-job-count"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "Features.featurize")
-      try Features.featurize(frame)._1.write.format("noop").mode("overwrite").save()
-      finally sc.clearJobGroup()
-      ListenerBusDrain(sc)
-    } finally {
-      sc.removeSparkListener(listener)
-      frame.unpersist()
-    }
-    assert(jobs.get > 0 && jobs.get <= 10, s"featurize jobs: ${jobs.get}")
+    val jobs =
+      try JobCount(spark.sparkContext, "features-job-count") {
+        Features.featurize(frame)._1.write.format("noop").mode("overwrite").save()
+      } finally frame.unpersist()
+    assert(jobs > 0 && jobs <= 10, s"featurize jobs: $jobs")
   }
 }
 

@@ -59,4 +59,26 @@ class CcPropertySpec extends SparkSpec {
       assert(got == expected, s"seed=$i edges=$edges")
     }
   }
+
+  private def labels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    import spark.implicits._
+    Dedup.connectedComponents(pairs.toDF("id_a", "id_b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
+  test("an empty pair frame gives an empty labelling") {
+    assert(labels(Seq.empty).isEmpty)
+  }
+
+  test("a vertex seen only in a self-loop is labelled as itself") {
+    assert(labels(Seq(7L -> 7L)) == Map(7L -> 7L))
+    assert(labels(Seq(7L -> 7L, 1L -> 2L)) == Map(7L -> 7L, 1L -> 1L, 2L -> 1L))
+  }
+
+  test("duplicate and reversed pairs label like the deduplicated pairs") {
+    val dedup = Seq(1L -> 2L, 2L -> 3L, 5L -> 6L)
+    val noisy = Seq(1L -> 2L, 2L -> 1L, 1L -> 2L, 3L -> 2L, 2L -> 3L, 6L -> 5L, 6L -> 5L)
+    assert(labels(dedup) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
+    assert(labels(noisy) == labels(dedup))
+  }
 }

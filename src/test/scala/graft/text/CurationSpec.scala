@@ -1,5 +1,7 @@
 package graft.text
 
+import org.apache.spark.JobCount
+import org.apache.spark.sql.CachedEntries
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.queries.DedupQueries
@@ -96,5 +98,32 @@ class CurationSpec extends SparkSpec {
     assert(ids.length == ids.distinct.length)
     val verbatim = ids.count(id => id >= DedupQueries.IdOffset && id < 2 * DedupQueries.IdOffset)
     assert(verbatim == 0, s"$verbatim verbatim copies survived")
+  }
+
+  test("incrementalSurvivors returns incrementalCurate's survivors and accounting, and leaves nothing cached") {
+    val history = graft.Tables.documents(spark, sf001)
+      .select(col("doc_id"), col("text"))
+    val minQ = DedupQueries.CurationMinQuality
+    val day1 = Curation.curateSketch(history, minQ, withAccounting = false)
+    val delta = DedupQueries.curationDelta(history)
+    val inc = Curation.incrementalCurate(day1.state, delta, minQ)
+    val cachedBefore = CachedEntries(spark)
+    val only = Curation.incrementalSurvivors(day1.state, delta, minQ)
+    assert(CachedEntries(spark) == cachedBefore, "a frame persisted by the call is still cached")
+    assert(only.accounting == inc.accounting)
+    assert(only.survivors.count() > 0)
+    assert(only.survivors.exceptAll(inc.survivors).isEmpty &&
+      inc.survivors.exceptAll(only.survivors).isEmpty)
+  }
+
+  test("q_curation_incremental starts at most 37 Spark jobs (one call + one noop write)") {
+    // 53 jobs before the survivors-only path, the single pair cut of
+    // connectedComponents, the window keeper rule and the parquet
+    // schema memo; 35 with them
+    def call(): Unit = DedupQueries.qCurationIncremental(spark, sf001)
+      .write.format("noop").mode("overwrite").save()
+    call() // builds the day-1 state, once per process
+    val jobs = JobCount(spark.sparkContext, "curation-incremental-job-count")(call())
+    assert(jobs > 0 && jobs <= 37, s"q_curation_incremental jobs: $jobs")
   }
 }
