@@ -17,22 +17,26 @@ import org.apache.spark.storage.StorageLevel
   *    semantics — progressive ±k ROWS-frame widening where step k=14
   *    only fills rows still null after k=7 (SURVEY §7.4.2) — but the
   *    ±k schedule is known before any job runs, so each step is a
-  *    window column chained on the previous step's column: the whole
-  *    widening is one plan, persisted once and counted in one job
+  *    window column chained on the previous step's column
   *    (SURVEY §4.3.1/.6);
   *  - `SeasonalMedian` (ipynb c16:116-155) is a per-(stn, month) window
-  *    median + conditional fill with a `ProximityMedian` fallback.
+  *    median + conditional fill with a `ProximityMedian` fallback chain.
   *
-  * Each strategy has one implementation over a list of columns, and
-  * [[applyAll]] runs adjacent strategies of the same kind and
-  * parameters on distinct columns as one batch. Batching is exact: a
-  * strategy reads only its own column plus the station/date keys
-  * (SURVEY §7.4.3), so filling several columns in one projection gives
-  * what filling them one after another gives.
+  * [[applyAll]] runs each maximal run of strategies on distinct columns
+  * as ONE plan: every strategy adds its step columns (a station median,
+  * a seasonal median, a ±k chain), computed for every row whether or
+  * not a gap needs them. A run with ±k chains is persisted once; one
+  * aggregate job returns every step's null count and every
+  * station-median column's global median; the scalar fallback reads the
+  * cached frame once, for the stalled chains only; a final projection
+  * keeps each column's answer and drops the steps. This is exact: a strategy reads only its
+  * own column plus the station/date keys (SURVEY §7.4.3), so filling
+  * several columns in one plan gives what filling them one after
+  * another gives. The single-column operators are one-strategy runs.
   *
   * No operator re-attaches an aggregate of the frame to the frame
   * itself: the median windows partition by station like the proximity
-  * windows, so the plan stays one linear chain per batch. Rows with
+  * windows, so the plan stays one linear chain per run. Rows with
   * a null key form one median group of their own (GSOD's `stn` and
   * `date` are non-nullable, GsodSchema).
   *
@@ -46,14 +50,8 @@ object Impute {
     * the reference's printed accounting (ipynb c18:out). */
   type Accounting = Seq[(String, Long)]
 
-  /** Null count of every named column, in one aggregate job. */
-  private def nullCounts(df: DataFrame, columns: Seq[String]): Map[String, Long] = {
-    val row = df.select(columns.map(c => count(when(col(c).isNull, 1))): _*).head()
-    columns.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap
-  }
-
-  /** One column's result out of a batch's. */
-  private def one(b: (DataFrame, Map[String, Accounting]), c: String): (DataFrame, Accounting) = (b._1, b._2(c))
+  /** One column's result out of a run's. */
+  private def one(r: (DataFrame, Map[String, Accounting], Map[String, Long]), c: String) = (r._1, r._2(c))
 
   /** Zero-fill (ipynb c17:7: `na.fill({'prcp': 0})`). Flips the column
     * non-nullable, matching the reference's post-fill schema
@@ -68,35 +66,16 @@ object Impute {
     *
     * Scale: the station median is a window aggregate partitioned by
     * `keyCol` — one sort within the station partitioning, no derived
-    * median table. Every column's null count and global median come
-    * from one aggregate job, not a per-station loop (SURVEY §4.3.3);
+    * median table. The null count and global median come from the
+    * run's one aggregate job, not a per-station loop (SURVEY §4.3.3);
     * a filled column's post-fill count is 0 by construction, so no
-    * second job counts it. */
+    * second job counts it. The reference's Python UDF returns
+    * FloatType, so its imputed values pass through a float32 round-trip
+    * (SURVEY §2.9); doubles are kept by default, and `float32Parity`
+    * reproduces the truncation bit-exactly. */
   def medianImputer(df: DataFrame, column: String,
       keyCol: String = "stn", float32Parity: Boolean = false): (DataFrame, Accounting) =
-    one(stationMedians(df, Seq(column), keyCol, float32Parity), column)
-
-  private def stationMedians(df: DataFrame, columns: Seq[String],
-      keyCol: String = "stn", float32Parity: Boolean = false): (DataFrame, Map[String, Accounting]) = {
-    val stats = df.select(columns.flatMap(c => Seq(count(when(col(c).isNull, 1)), median(col(c)))): _*).head()
-    val before = columns.indices.map(i => columns(i) -> stats.getLong(2 * i)).toMap
-    // an entirely-null column has no median to impute from
-    val global = columns.indices.filterNot(i => stats.isNullAt(2 * i + 1))
-      .map(i => columns(i) -> stats.getDouble(2 * i + 1)).toMap
-    val gaps = columns.filter(c => before(c) > 0 && global.contains(c))
-    // The reference's Python UDF returns FloatType, so its imputed
-    // values pass through a float32 round-trip before landing in the
-    // double column (SURVEY §2.9). We keep doubles by default;
-    // float32Parity reproduces the truncation bit-exactly.
-    val out = df.withColumns(gaps.map { c =>
-      val fill = coalesce(median(col(c)).over(Window.partitionBy(col(keyCol))), lit(global(c)))
-      c -> when(col(c).isNull, if (float32Parity) fill.cast("float").cast("double") else fill).otherwise(col(c))
-    }.toMap)
-    // every gap's fill ends in a non-null global-median literal, so no
-    // null survives in it: no count job is needed to learn that
-    val after = before ++ gaps.map(_ -> 0L)
-    (out, after.map { case (c, n) => c -> Seq("station-median" -> n) })
-  }
+    one(run(df, Seq(StationMedian(column)), Seq(keyCol), float32Parity = float32Parity), column)
 
   /** Proximity imputer (ipynb c16:60-113 `ProximityMedian` — misnamed:
     * it computes a window *average*). Widens a ±k ROWS
@@ -112,57 +91,14 @@ object Impute {
     * frozen before k=14 runs (SURVEY §7.4.2). Every step of the
     * schedule is computed; the accounting stops after the first step
     * that leaves no nulls, which is where the reference's loop stops
-    * (later steps change nothing). The widened frame is persisted
-    * once, one aggregate job counts every step of every column, and
-    * the scalar fallback reads that cached frame. */
+    * (later steps change nothing). An entirely-null column leaves no
+    * value to fall back to; its accounting records the stall. */
   def proximityMedian(df: DataFrame, column: String,
       initialNumDays: Int = 7, maxDays: Int = 30,
       fallbackStrategy: String = "median",
       partitionCols: Seq[String] = Seq("stn"),
       orderCols: Seq[String] = Seq("date")): (DataFrame, Accounting) =
-    one(proximity(df, Seq(column), initialNumDays, maxDays, fallbackStrategy, partitionCols, orderCols), column)
-
-  private def proximity(df: DataFrame, columns: Seq[String], initialNumDays: Int, maxDays: Int,
-      fallbackStrategy: String, partitionCols: Seq[String] = Seq("stn"),
-      orderCols: Seq[String] = Seq("date")): (DataFrame, Map[String, Accounting]) = {
-    require(initialNumDays > 0, s"initialNumDays must be positive, got $initialNumDays")
-    if (columns.isEmpty) return (df, Map.empty)
-    val ks = Iterator.iterate(initialNumDays.toLong)(_ * 2).takeWhile(_ <= maxDays).map(_.toInt).toSeq
-    val w = Window.partitionBy(partitionCols.map(col): _*).orderBy(orderCols.map(col): _*)
-    // stages(c): the column itself, then one column per ±k step
-    val stages = columns.map(c => c -> (c +: ks.map(k => s"${c}__proximity$k"))).toMap
-    val widened = ks.indices.foldLeft(df) { (cur, i) =>
-      cur.withColumns(columns.map { c =>
-        val prev = col(stages(c)(i))
-        stages(c)(i + 1) -> when(prev.isNull, avg(prev).over(w.rowsBetween(-ks(i), ks(i)))).otherwise(prev)
-      }.toMap)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    val nulls = nullCounts(widened, columns.flatMap(stages))
-    val stalled = columns.filter(c => nulls(stages(c).last) > 0)
-    // The scalar fallback: the Greenwald–Khanna approx median of the
-    // non-null values (ipynb c16:96, relativeError 0.001), or their mean,
-    // for all still-null columns in one pass over the cached frame. An
-    // entirely-null column leaves nothing to compute it from
-    // (approxQuantile returns an empty array, avg returns null); its
-    // accounting records the stall instead of crashing the job.
-    val fallback = stalled.zip(
-      if (stalled.isEmpty) Nil
-      else if (fallbackStrategy == "median")
-        widened.stat.approxQuantile(stalled.map(stages(_).last).toArray, Array(0.5), 0.001).toSeq.map(_.headOption)
-      else widened.select(stalled.map(c => avg(col(stages(c).last))): _*).head().toSeq.map(Option(_))
-    ).collect { case (c, Some(v: Double)) => c -> v }.toMap
-    val out = widened.withColumns(columns.filter(nulls(_) > 0).map { c =>
-      val filled = col(stages(c).last)
-      c -> fallback.get(c).fold(filled)(v => when(filled.isNull, lit(v)).otherwise(filled))
-    }.toMap).drop(columns.flatMap(stages(_).tail): _*)
-    // A stage is recorded iff nulls remain before it: the reference's
-    // loop condition (`missing > 0`), and its fallback condition.
-    (out, columns.map { c =>
-      val counts = stages(c).map(nulls) :+ (if (fallback.contains(c)) 0L else nulls(stages(c).last))
-      val labels = ks.map(k => s"proximity±$k") :+ s"fallback-$fallbackStrategy"
-      c -> labels.zip(counts.tail).zip(counts).collect { case (stage, before) if before > 0 => stage }
-    }.toMap)
-  }
+    one(run(df, Seq(Proximity(column, initialNumDays, maxDays, fallbackStrategy)), partitionCols, orderCols), column)
 
   /** Seasonal-median imputer (ipynb c16:116-155
     * `ImputeTempWithSeasonalMedian`): per-(station, calendar month)
@@ -172,26 +108,11 @@ object Impute {
     * (SURVEY §7.4.4) — and a ProximityMedian fallback for
     * station-months whose median is null (ipynb c16:150-153).
     *
-    * Scale: one window covers every column and partitions by station
-    * first, so it reuses the station partitioning the proximity
-    * windows already established; one count follows. */
+    * Scale: the month window partitions by station first, so it reuses
+    * the station partitioning of the fallback chain's windows. */
   def seasonalMedian(df: DataFrame, column: String,
       initialNumDays: Int = 7, maxDays: Int = 31): (DataFrame, Accounting) =
-    one(seasonal(df, Seq(column), initialNumDays, maxDays), column)
-
-  private def seasonal(df: DataFrame, columns: Seq[String], initialNumDays: Int, maxDays: Int)
-      : (DataFrame, Map[String, Accounting]) = {
-    val byMonth = Window.partitionBy(col("stn"), month(col("date")))
-    def filled(c: String) = s"${c}__seasonal"
-    val medians = df.withColumns(columns.map(c => filled(c) ->
-        when(col(c).isNull, median(col(c)).over(byMonth)).otherwise(col(c))).toMap)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nulls = nullCounts(medians, columns.flatMap(c => Seq(c, filled(c))))
-    val gaps = columns.filter(nulls(_) > 0)
-    val seasonalFilled = medians.withColumns(gaps.map(c => c -> col(filled(c))).toMap).drop(columns.map(filled): _*)
-    val (out, prox) = proximity(seasonalFilled, gaps.filter(c => nulls(filled(c)) > 0), initialNumDays, maxDays, "median")
-    (out, columns.map(c => c -> (("seasonal-median" -> nulls(filled(c))) +: prox.getOrElse(c, Nil))).toMap)
-  }
+    one(run(df, Seq(Seasonal(column, initialNumDays, maxDays))), column)
 
   /** A single imputation strategy bound to its target column. */
   sealed trait Strategy extends Product { def column: String }
@@ -208,31 +129,115 @@ object Impute {
     Zero("prcp"),
     Seasonal("max"), Seasonal("min"))
 
-  /** A strategy's class and parameters: `column` is every strategy's
-    * first field, and strategies of equal kind can run as one batch. */
-  private def kind(st: Strategy): (Class[_], List[Any]) = (st.getClass, st.productIterator.drop(1).toList)
-
   /** Apply strategies in order, threading one DataFrame through
-    * (ipynb c18:1-2), collecting per-stage accounting. Adjacent
-    * strategies of the same kind and parameters on distinct columns
-    * run as one batch; a column named again starts a new batch, so it
-    * sees the earlier strategy's output. */
+    * (ipynb c18:1-2), collecting per-stage accounting. Each maximal
+    * run of strategies on distinct columns is one plan; a column named
+    * again starts the next run, so it sees the earlier strategy's
+    * output. */
   def applyAll(df: DataFrame,
       strategies: Seq[Strategy] = referenceStrategies): (DataFrame, Map[String, Accounting]) = {
-    val batches = strategies.foldLeft(Vector.empty[Vector[Strategy]]) {
-      case (done :+ batch, st) if kind(batch.head) == kind(st) && !batch.exists(_.column == st.column) =>
-        done :+ (batch :+ st)
+    val runs = strategies.foldLeft(Vector.empty[Vector[Strategy]]) {
+      case (done :+ last, st) if !last.exists(_.column == st.column) => done :+ (last :+ st)
       case (done, st) => done :+ Vector(st)
     }
-    batches.foldLeft((df, Map.empty[String, Accounting])) { case ((cur, acc), batch) =>
-      val cols = batch.map(_.column)
-      val (next, a) = batch.head match {
-        case Proximity(_, i, m, f) => proximity(cur, cols, i, m, f)
-        case Zero(_) => (cols.foldLeft(cur)(zeroFill), cols.map(_ -> Seq("zero-fill" -> 0L)).toMap)
-        case Seasonal(_, i, m) => seasonal(cur, cols, i, m)
-        case StationMedian(_) => stationMedians(cur, cols)
-      }
+    runs.foldLeft((df, Map.empty[String, Accounting])) { case ((cur, acc), r) =>
+      val (next, a, _) = run(cur, r)
       (next, acc ++ a)
     }
+  }
+
+  /** The ±k widening of `column`, read from `stages.head`: the steps
+    * `ks`, each filling only what the stage before it left null. */
+  private final case class Chain(column: String, source: String, ks: Seq[Int], fallback: String) {
+    val stages: Seq[String] = source +: ks.map(k => s"${column}__proximity$k")
+  }
+
+  private def schedule(initialNumDays: Int, maxDays: Int): Seq[Int] = {
+    require(initialNumDays > 0, s"initialNumDays must be positive, got $initialNumDays")
+    Iterator.iterate(initialNumDays.toLong)(_ * 2).takeWhile(_ <= maxDays).map(_.toInt).toSeq
+  }
+
+  /** One run of strategies on distinct columns as one plan (see the
+    * object doc). Proximity chains and station medians partition by
+    * `partitionCols`; seasonal months by `stn` and `date`. Returns the
+    * frame, each column's accounting, and each column's null count
+    * before the run (Zero columns are not counted). */
+  private[gsod] def run(df: DataFrame, strategies: Seq[Strategy],
+      partitionCols: Seq[String] = Seq("stn"), orderCols: Seq[String] = Seq("date"),
+      float32Parity: Boolean = false): (DataFrame, Map[String, Accounting], Map[String, Long]) = {
+    val filled = strategies.collect { case Zero(c) => c }.foldLeft(df)(zeroFill)
+    def seasonal(c: String) = s"${c}__seasonal"
+    def station(c: String) = s"${c}__station"
+    val chains = strategies.collect {
+      case Proximity(c, i, m, f) => Chain(c, c, schedule(i, m), f)
+      case Seasonal(c, i, m) => Chain(c, seasonal(c), schedule(i, m), "median")
+    }
+    val medians = strategies.collect {
+      case Seasonal(c, _, _) => seasonal(c) ->
+        when(col(c).isNull, median(col(c)).over(Window.partitionBy(col("stn"), month(col("date"))))).otherwise(col(c))
+      case StationMedian(c) => station(c) -> median(col(c)).over(Window.partitionBy(partitionCols.map(col): _*))
+    }
+    val stationCols = strategies.collect { case StationMedian(c) => c }
+    val counted = (strategies.filterNot(_.isInstanceOf[Zero]).map(_.column) ++ chains.flatMap(_.stages)).distinct
+    if (counted.isEmpty) return (filled, strategies.map(_.column -> Seq("zero-fill" -> 0L)).toMap, Map.empty)
+    val w = Window.partitionBy(partitionCols.map(col): _*).orderBy(orderCols.map(col): _*)
+    val stepped = (0 until chains.map(_.ks.size).maxOption.getOrElse(0)).foldLeft(filled.withColumns(medians.toMap)) {
+      (cur, i) => cur.withColumns(chains.filter(_.ks.size > i).map { ch =>
+        val prev = col(ch.stages(i))
+        ch.stages(i + 1) -> when(prev.isNull, avg(prev).over(w.rowsBetween(-ch.ks(i), ch.ks(i)))).otherwise(prev)
+      }.toMap)
+    }
+    // The count reads every chain step, so it computes the windows: the
+    // frame is cut there, and the fallback and the answer read the cut.
+    // Without chains (station medians and zero fills only) the count
+    // reads only the run's own columns, so the optimizer drops the
+    // median windows from it: nothing is cut, and the windows run once,
+    // in the answer's plan.
+    if (chains.nonEmpty) stepped.persist(StorageLevel.MEMORY_AND_DISK)
+    val stats = stepped
+      .select(counted.map(c => count(when(col(c).isNull, 1))) ++ stationCols.map(c => median(col(c))): _*).head()
+    val nulls = counted.zipWithIndex.map { case (c, i) => c -> stats.getLong(i) }.toMap
+    // an entirely-null column has no median to impute from
+    val globalMedian = stationCols.zipWithIndex.collect {
+      case (c, i) if !stats.isNullAt(counted.size + i) => c -> stats.getDouble(counted.size + i)
+    }.toMap
+    // The scalar fallback: the Greenwald–Khanna approx median of the
+    // non-null values (ipynb c16:96, relativeError 0.001), or their mean,
+    // for the stalled chains only, one pass each over the cached frame.
+    // An entirely-null column leaves nothing to compute it from
+    // (approxQuantile returns an empty array, avg returns null); its
+    // accounting records the stall instead of crashing the job.
+    val (byMedian, byMean) = chains.filter(ch => nulls(ch.stages.last) > 0).partition(_.fallback == "median")
+    val medianFills = if (byMedian.isEmpty) Nil else stepped.stat
+      .approxQuantile(byMedian.map(_.stages.last).toArray, Array(0.5), 0.001).toSeq.map(_.headOption)
+    val meanFills = if (byMean.isEmpty) Nil else stepped
+      .select(byMean.map(ch => avg(col(ch.stages.last))): _*).head().toSeq.map(Option(_))
+    val fallback = (byMedian ++ byMean).map(_.column).zip(medianFills ++ meanFills)
+      .collect { case (c, Some(v: Double)) => c -> v }.toMap
+    val answers = chains.map { ch =>
+      val last = col(ch.stages.last)
+      ch.column -> fallback.get(ch.column).fold(last)(v => when(last.isNull, lit(v)).otherwise(last))
+    } ++ stationCols.filter(globalMedian.contains).map { c =>
+      val fill = coalesce(col(station(c)), lit(globalMedian(c)))
+      c -> when(col(c).isNull, if (float32Parity) fill.cast("float").cast("double") else fill).otherwise(col(c))
+    }
+    // a column without nulls keeps its own expression and nullability
+    val out = stepped.withColumns(answers.filter { case (c, _) => nulls(c) > 0 }.toMap)
+      .drop(medians.map(_._1) ++ chains.flatMap(_.stages.tail): _*)
+    // A widening stage is recorded iff nulls remain before it: the
+    // reference's loop condition (`missing > 0`), and its fallback
+    // condition.
+    def widening(ch: Chain): Accounting = {
+      val counts = ch.stages.map(nulls) :+ (if (fallback.contains(ch.column)) 0L else nulls(ch.stages.last))
+      val labels = ch.ks.map(k => s"proximity±$k") :+ s"fallback-${ch.fallback}"
+      labels.zip(counts.tail).zip(counts).collect { case (stage, before) if before > 0 => stage }
+    }
+    val chainOf = chains.map(ch => ch.column -> ch).toMap
+    (out, strategies.map {
+      case Zero(c) => c -> Seq("zero-fill" -> 0L)
+      case Proximity(c, _, _, _) => c -> widening(chainOf(c))
+      case Seasonal(c, _, _) => c -> (("seasonal-median" -> nulls(seasonal(c))) +: widening(chainOf(c)))
+      case StationMedian(c) => c -> Seq("station-median" -> (if (globalMedian.contains(c)) 0L else nulls(c)))
+    }.toMap, nulls)
   }
 }

@@ -53,6 +53,20 @@ object Curation {
 
   final case class Result(survivors: DataFrame, accounting: Seq[(String, Long)])
 
+  /** The quality stage of every curation path: the rows whose
+    * [[TextAnalysis.withQualitySignals]] score reaches `minQuality`,
+    * as (id, text). The score is projected under the eager cut and the
+    * gate filters the cut rows, so each row's score is evaluated once:
+    * a filter above the score's projection is pushed into every branch
+    * of the input's plan (a delta's union, its parquet scans), each
+    * re-deriving the text and the score there. */
+  private def qualityGate(docs: DataFrame, minQuality: Double, textCol: String, idCol: String): DataFrame =
+    TextAnalysis.withQualitySignals(docs, textCol)
+      .select(col(idCol), col(textCol), col("quality_score"))
+      .localCheckpoint(true)
+      .filter(col("quality_score") >= minQuality)
+      .select(col(idCol), col(textCol))
+
   /** `withAccounting = false` skips the per-stage count actions (the
     * reference-style printed accounting); counts read the already-
     * materialized checkpoint/cache blocks, so accounting costs scans,
@@ -72,10 +86,7 @@ object Curation {
     account("input", docs)
 
     // eager: feeds the keeper build AND the semi-join probe of one job
-    val quality = TextAnalysis.withQualitySignals(docs, textCol)
-      .filter(col("quality_score") >= minQuality)
-      .select(col(idCol), col(textCol))
-      .localCheckpoint(true)
+    val quality = qualityGate(docs, minQuality, textCol, idCol)
     account("quality", quality)
     if (quality.isEmpty) {
       account("exact-dedup", quality)
@@ -135,10 +146,7 @@ object Curation {
       if (withAccounting) acc += stage -> df.count()
     account("input", docs)
 
-    val quality = TextAnalysis.withQualitySignals(docs, textCol)
-      .filter(col("quality_score") >= minQuality)
-      .select(col(idCol), col(textCol))
-      .localCheckpoint(true)
+    val quality = qualityGate(docs, minQuality, textCol, idCol)
     account("quality", quality)
 
     val keepers = Dedup.exactDedup(quality, textCol, idCol)
@@ -272,10 +280,7 @@ object Curation {
       if (withAccounting) acc += stage -> df.count()
     account("input", delta)
 
-    val quality = TextAnalysis.withQualitySignals(delta, textCol)
-      .filter(col("quality_score") >= minQuality)
-      .select(col(idCol), col(textCol))
-      .localCheckpoint(true)
+    val quality = qualityGate(delta, minQuality, textCol, idCol)
     account("quality", quality)
 
     val fresh = Dedup.incrementalExactDedup(state.digests, quality, textCol, idCol)

@@ -1,6 +1,7 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -280,7 +281,7 @@ object Dedup {
     */
   private[text] def attachShingleDf(exploded: DataFrame, idCol: String,
       hotShingleDf: Long): (DataFrame, Seq[DataFrame]) = {
-    val byH = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
+    val byH = Window.partitionBy(col("h"))
     val hot = exploded.groupBy(col("h"))
       .agg(count(lit(1)).as("hot_df"))
       .filter(col("hot_df") > hotShingleDf)
@@ -370,25 +371,25 @@ object Dedup {
   private[graft] def ccRound(edges: DataFrame): DataFrame = {
     // large-star: for canonical (s, b) the only v > u case is u = s,
     // v = b, but the neighborhood minimum must see BOTH directions.
+    // Both halves take their minimum as a window over the rows that
+    // use it: one exchange on u each, no aggregate joined back.
+    val byU = Window.partitionBy(col("u"))
     val sym = edges.select(col("s").as("u"), col("b").as("v"))
       .union(edges.select(col("b").as("u"), col("s").as("v")))
-    val uMin = sym.groupBy(col("u"))
-      .agg(min(col("v")).as("mn"))
-      .select(col("u"), least(col("mn"), col("u")).as("m"))
     // no distinct here: duplicate (m, v) rows (same attachment reached
     // through different u) don't change small-star's min and are
     // collapsed by the round-final distinct — saves a shuffle/round
-    val large = sym.filter(col("v") > col("u"))
-      .join(uMin, Seq("u"))
+    val large = sym.withColumn("m", least(min(col("v")).over(byU), col("u")))
+      .filter(col("v") > col("u"))
       .select(col("m").as("s"), col("v").as("b"))  // m <= u < v
       .filter(col("s") =!= col("b"))
-    // small-star on the large-star output: orient big → small.
-    val oriented = large.select(col("b").as("u"), col("s").as("v")) // v < u
-    val oMin = oriented.groupBy(col("u")).agg(min(col("v")).as("m"))
-    oriented.join(oMin, Seq("u"))
-      .filter(col("v") =!= col("m"))
-      .select(col("m").as("s"), col("v").as("b"))  // m = min(Γ<(u)) < v
-      .union(oMin.select(col("m").as("s"), col("u").as("b")))     // m < u
+    // small-star on the large-star output: orient big → small; each row
+    // (u, v) attaches both v and u to m = min(Γ<(u)) < u, and v = m is
+    // the self-loop the filter drops
+    large.select(col("b").as("u"), col("s").as("v"))  // v < u
+      .withColumn("m", min(col("v")).over(byU))
+      .select(col("m").as("s"), explode(array(col("v"), col("u"))).as("b"))
+      .filter(col("s") =!= col("b"))
       .distinct()
   }
 
@@ -421,8 +422,8 @@ object Dedup {
     *     minimum of its neighborhood (incl. itself);
     *   small-star: orient edges big→small, every vertex's smaller
     *     neighbors (and itself) re-attach to its minimum neighbor.
-    * Both halves are one groupBy(min) + one equi-join over (long,
-    * long) edge rows — map-side combinable, no driver state. The
+    * Both halves are one window min over (long, long) edge rows,
+    * partitioned by the re-attaching vertex — no driver state. The
     * fixpoint is the star set {(root, v)}: each member attached
     * directly to its component's min id, which IS the output labeling.
     *
@@ -436,12 +437,12 @@ object Dedup {
     * structural test: the round output is a fixpoint iff it is a star
     * forest (no vertex on both root and member side, every member
     * attached to exactly one root). The check is FUSED with the
-    * checkpoint: rounds checkpoint lazily and the check's groupBy is
-    * the materializing action, so each round costs one job — r8
-    * eager-checkpointed and paid a separate materialization job per
-    * round, a measured 1.46× on q_dedup_clusters; and unlike a
-    * round-over-round fingerprint compare, the structural test needs
-    * no redundant confirmation round.
+    * checkpoint: rounds checkpoint lazily and the check's job computes
+    * and caches the round's rows, so no separate materialization job
+    * runs (r8 eager-checkpointed and paid one per round, a measured
+    * 1.46× on q_dedup_clusters); and unlike a round-over-round
+    * fingerprint compare, the structural test needs no redundant
+    * confirmation round.
     *
     * The pair pipeline under `pairs` is cut ONCE, as its canonical
     * (least, greatest) pairs ([[canonicalEdges]]); the loop's edges and
@@ -466,16 +467,20 @@ object Dedup {
         .agg(sum(col("n_root")).as("n_root"), sum(col("n_member")).as("n_member"))
         .filter(col("n_member") > 1 || (col("n_root") > 0 && col("n_member") > 0))
         .isEmpty
-    // localCheckpoint(eager = false) for every round: the
-    // structural convergence check is the materializing action (its
-    // groupBy shuffle computes every input partition, and the job-end
-    // doCheckpoint caches them + truncates lineage), so each round
-    // costs exactly ONE job — r8 eager-checkpointed and so paid a
-    // materialization job PLUS a check job per round, the measured
-    // 1.46× on q_dedup_clusters. Unlike a round-over-round fingerprint
-    // compare, the structural test also needs NO redundant
-    // confirmation round: it detects the star forest the moment a
-    // round produces it (q_dedup_clusters converges in 1 round, not 2).
+    // localCheckpoint(eager = false) for every round. Lazy is not
+    // free under AQE: building the round's RDD finalizes its adaptive
+    // plan, which runs every shuffle stage of the round at the call —
+    // one job per exchange (the large-star window, the small-star
+    // window, the round-final distinct: 3). The round's result stage
+    // is left to the convergence check, whose groupBy computes every
+    // round partition and whose job-end doCheckpoint caches them and
+    // truncates lineage; the check adds its own exchange and result
+    // (2 jobs). r8 eager-checkpointed and so paid a separate
+    // materialization job per round on top, the measured 1.46× on
+    // q_dedup_clusters. Unlike a round-over-round fingerprint compare,
+    // the structural test also needs NO redundant confirmation round:
+    // it detects the star forest the moment a round produces it
+    // (q_dedup_clusters converges in 1 round, not 2).
     // the loop's edges (s < b, self-loops dropped): a narrow filter
     // over the cut, so round 1 reads checkpoint blocks
     var edges = canon.filter(col("s") =!= col("b"))

@@ -2,7 +2,8 @@ package graft.gsod
 
 import java.time.LocalDate
 import org.apache.spark.JobCount
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{CachedEntries, DataFrame, Row}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import graft.SparkSpec
 import graft.bench.GsodBench
@@ -84,7 +85,9 @@ class ImputeBatchSpec extends SparkSpec {
     val fixtureCols = cleaned.schema.fields.collect { case f if f.dataType == DoubleType => f.name }.toSeq
     // `frame`'s `e` is entirely null: no median to fill from, so it keeps its count
     Seq(cleaned -> fixtureCols, frame -> Seq("a", "b", "c", "d", "e", "f")).foreach { case (df, cols) =>
+      val cachedBefore = CachedEntries(spark)
       val (out, acc) = applyAll(df, cols.map(StationMedian(_)))
+      assert(CachedEntries(spark) == cachedBefore, "a run without ±k chains persists nothing")
       val counted = Clean.missingCountMap(out, cols)
       assert(acc == cols.map(c => c -> Seq("station-median" -> counted(c))).toMap)
     }
@@ -98,13 +101,46 @@ class ImputeBatchSpec extends SparkSpec {
     }
   }
 
-  test("prepare starts at most 18 Spark jobs (prepare + one noop write): one batch per strategy kind") {
+  test("one run of every strategy kind on distinct columns matches the single-column fold") {
+    // d reaches the mean fallback, e (entirely null) stalls its median
+    // fallback, f's blank January falls through the seasonal median to
+    // its proximity chain and the approx-median fallback
+    val acc = assertSameAsFold(Seq(Proximity("d", 1, 4, "mean"), Zero("c"), Seasonal("f", 1, 4),
+      StationMedian("a"), Proximity("e", 1, 4), Proximity("b", 1, 4)))
+    assert(acc("d").last == ("fallback-mean" -> 0L))
+    assert(acc("e").last == ("fallback-median" -> 80L))
+    assert(acc("f").head == ("seasonal-median" -> 12L) && acc("f").last == ("fallback-median" -> 0L))
+    assert(acc("a") == Seq("station-median" -> 0L) && acc("c") == Seq("zero-fill" -> 0L))
+  }
+
+  test("prepare accounts an entirely-null covered column as its station-median stall") {
+    val raw = Fixture.df(spark).withColumn("visib", lit(null).cast(DoubleType))
+      .withColumn("max", lit(null).cast(DoubleType))
+    val n = raw.count()
+    val (out, acc) = GsodPipeline.prepare(raw)
+    assert(acc("visib") == Seq("station-median" -> n) && acc("max") == Seq("station-median" -> n))
+    assert(acc("wdsp") == Seq("proximity±7" -> 0L) && acc("prcp") == Seq("zero-fill" -> 0L))
+    val left = Clean.missingCountMap(out, GsodSchema.numericColumns)
+    assert(left == GsodSchema.numericColumns.map(c => c -> (if (c == "visib" || c == "max") n else 0L)).toMap)
+  }
+
+  test("prepare starts at most 6 Spark jobs (prepare + one noop write): the whole table is one run") {
     // Each strategy once per column, with a persist and count per ±k
-    // step, started 36 jobs here; the chained-step batches start 12.
+    // step, started 36 jobs here; one batch per strategy kind, each
+    // persisted and counted, 12; one run, persisted and counted once, 5.
     val raw = GsodBench.generate(spark, 20, 365)
     val jobs = JobCount(spark.sparkContext, "prepare-job-count") {
       GsodPipeline.prepare(raw)._1.write.format("noop").mode("overwrite").save()
     }
-    assert(jobs > 0 && jobs <= 18, s"prepare jobs: $jobs")
+    assert(jobs > 0 && jobs <= 6, s"prepare jobs: $jobs")
+  }
+
+  test("prepare persists exactly one frame") {
+    val raw = GsodBench.generate(spark, 20, 365)
+    spark.catalog.clearCache()
+    val before = CachedEntries(spark)
+    GsodPipeline.prepare(raw)._1.write.format("noop").mode("overwrite").save()
+    assert(CachedEntries(spark) - before == 1, "one persisted frame per prepare")
+    spark.catalog.clearCache()
   }
 }
