@@ -188,20 +188,18 @@ object ExplainDump {
     * `Scan ExistingRDD` shell in the end-to-end dump (q_curation,
     * q_curation_incremental): each stage is rebuilt UN-checkpointed so
     * its full plan — the one a 100×-scale reviewer must audit — prints.
-    * Construction mirrors [[graft.text.Curation]] stage for stage. */
+    * Stage 1 is the projection [[graft.text.Curation.qualityGate]]
+    * cuts, and the later stages read that gate's own output. */
   def curationStages(spark: SparkSession, sf: String): Seq[(String, DataFrame)] = {
     import graft.queries.DedupQueries
-    import graft.text.{Dedup, TextAnalysis}
+    import graft.text.{Curation, Dedup}
     val corpus = DedupQueries.corpusTriple(spark, sf)
-    val quality = TextAnalysis.withQualitySignals(corpus)
-      .filter(col("quality_score") >= DedupQueries.CurationMinQuality)
-      .select(col("doc_id"), col("text"))
     // each later stage prints over its PREDECESSOR'S checkpoint — what
     // the real pipeline executes — both because that is the honest
     // per-stage plan and because an un-checkpointed chain re-prints the
     // whole upstream subtree at every self-join (a 27k-line dump for
     // the anti-join stage alone)
-    val qualityCp = quality.localCheckpoint(true)
+    val qualityCp = Curation.qualityGate(corpus, DedupQueries.CurationMinQuality)
     val keepers = Dedup.exactDedup(qualityCp).select(col("keeper").as("doc_id"))
     val exact = qualityCp.join(keepers, Seq("doc_id"), "left_semi")
     val exactCp = exact.localCheckpoint(true)
@@ -212,7 +210,7 @@ object ExplainDump {
     val nonKeepers = round.localCheckpoint(true).select(col("b").as("doc_id"))
     val survivors = exactCp.join(nonKeepers, Seq("doc_id"), "left_anti")
     Seq(
-      "q_curation stage 1: quality gate" -> quality,
+      "q_curation stage 1: quality gate" -> Curation.qualityProjection(corpus),
       "q_curation stage 2: exact-dedup keeper semi-join" -> exact,
       "q_curation stage 3: ngram-Jaccard pair generation (PPJoin)" -> pairs,
       "q_curation stage 4: one CC large/small-star round" -> round,
@@ -221,31 +219,27 @@ object ExplainDump {
 
   /** Same for the incremental pipeline: the delta-vs-state stages of
     * the core that [[graft.text.Curation.incrementalCurate]] and
-    * [[graft.text.Curation.incrementalSurvivors]] share (the registered
-    * query calls the latter), over the day-1 state of
-    * [[graft.text.Curation.curateSketch]]. The stages after the pairs —
-    * the connectedComponents cut and round, the keeper rule — are the
-    * q_curation dumps' stages 4–5; the state append is not dumped,
-    * since the query does not run it. */
+    * [[graft.text.Curation.incrementalSurvivors]] share, over the
+    * registered q_curation_incremental query's own delta
+    * ([[graft.queries.DedupQueries.curationDelta]]) and reloaded day-1
+    * state ([[graft.queries.DedupQueries.curationState]]). The stages
+    * after the pairs — the connectedComponents cut and round, the
+    * keeper rule — are the q_curation dumps' stages 4–5; the state
+    * append is not dumped, since the query does not run it. */
   def incrementalStages(spark: SparkSession, sf: String): Seq[(String, DataFrame)] = {
     import graft.queries.DedupQueries
-    import graft.text.{Curation, Dedup, TextAnalysis}
+    import graft.text.{Curation, Dedup}
     val docs = graft.Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    val day1 = Curation.curateSketch(docs, DedupQueries.CurationMinQuality,
-      withAccounting = false)
-    val delta = docs.select((col("doc_id") + 2 * DedupQueries.IdOffset).as("doc_id"),
-      concat_ws(" ", slice(Dedup.tokens(col("text")), 2, 100000)).as("text"))
-    val quality = TextAnalysis.withQualitySignals(delta)
-      .filter(col("quality_score") >= DedupQueries.CurationMinQuality)
-      .select(col("doc_id"), col("text"))
+    val state = DedupQueries.curationState(docs, sf)
+    val delta = DedupQueries.curationDelta(docs)
     // per-stage checkpoints, same rationale as curationStages
-    val qualityCp = quality.localCheckpoint(true)
-    val fresh = Dedup.incrementalExactDedup(day1.state.digests, qualityCp)
+    val qualityCp = Curation.qualityGate(delta, DedupQueries.CurationMinQuality)
+    val fresh = Dedup.incrementalExactDedup(state.digests, qualityCp)
       .select(col("doc_id"), col("text"))
     val (pairs, _, _, mhHandle) = Dedup.incrementalMinhashPairsFull(
-      day1.state.bands, day1.state.sets, fresh.localCheckpoint(true), 3, 0.2)
+      state.bands, state.sets, fresh.localCheckpoint(true), 3, 0.2)
     val stages = Seq(
-      "q_curation_incremental stage 1: delta quality gate" -> quality,
+      "q_curation_incremental stage 1: delta quality gate" -> Curation.qualityProjection(delta),
       "q_curation_incremental stage 2: incremental exact dedup vs persisted digests" -> fresh,
       "q_curation_incremental stage 3: incremental minhash pairs vs persisted band index" -> pairs)
     mhHandle.unpersist()

@@ -52,9 +52,10 @@ object Train {
       .setMaxIter(maxIter).setSeed(seed)
       .fit(train)
 
-  /** RMSE via RegressionEvaluator (M10, ipynb c34:7) plus the RDD-API
-    * RegressionMetrics bundle (M12, ipynb c36:1-10) — both surfaces the
-    * reference uses, same numbers. */
+  /** RMSE, MSE, MAE and R² from the RDD-API RegressionMetrics bundle
+    * (M12, ipynb c36:1-10) — the only evaluator this runs. The
+    * reference's RegressionEvaluator surface (M10, ipynb c34:7) is
+    * [[rmse]]; both compute the same RMSE. */
   def evaluateRegression(predictions: DataFrame,
       labelCol: String = Features.labelReg): RegMetrics = {
     val rdd = predictions

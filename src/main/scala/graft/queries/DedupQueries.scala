@@ -416,16 +416,23 @@ object DedupQueries {
 
   def qCurationIncremental(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val dir = curationStateDir(docs, d)
-    val state = graft.text.Curation.SketchState(
-      Tables.parquet(s, s"$dir/digests"),
-      Tables.parquet(s, s"$dir/bands"),
-      Tables.parquet(s, s"$dir/sets"))
-    graft.text.Curation.incrementalSurvivors(state, curationDelta(docs),
-        CurationMinQuality, withAccounting = false)
+    graft.text.Curation.incrementalSurvivors(curationState(docs, d),
+        curationDelta(docs), CurationMinQuality, withAccounting = false)
       .survivors
       .select(col("doc_id"))
       .orderBy(col("doc_id"))
+  }
+
+  /** The day-1 [[graft.text.Curation.SketchState]] of `docs`, reloaded
+    * from its parquet artifact as [[qCurationIncremental]] reads it. */
+  private[graft] def curationState(docs: DataFrame, d: String)
+      : graft.text.Curation.SketchState = {
+    val s = docs.sparkSession
+    val dir = curationStateDir(docs, d)
+    graft.text.Curation.SketchState(
+      Tables.parquet(s, s"$dir/digests"),
+      Tables.parquet(s, s"$dir/bands"),
+      Tables.parquet(s, s"$dir/sets"))
   }
 
   /** The day-2 delta of the incremental-curation fixture: verbatim

@@ -53,6 +53,14 @@ object Curation {
 
   final case class Result(survivors: DataFrame, accounting: Seq[(String, Long)])
 
+  /** The projection [[qualityGate]]'s eager cut materializes: (id,
+    * text, quality_score), unfiltered. ExplainDump prints this frame
+    * as the quality stage's plan. */
+  private[graft] def qualityProjection(docs: DataFrame, textCol: String = "text",
+      idCol: String = "doc_id"): DataFrame =
+    TextAnalysis.withQualitySignals(docs, textCol)
+      .select(col(idCol), col(textCol), col("quality_score"))
+
   /** The quality stage of every curation path: the rows whose
     * [[TextAnalysis.withQualitySignals]] score reaches `minQuality`,
     * as (id, text). The score is projected under the eager cut and the
@@ -60,9 +68,9 @@ object Curation {
     * a filter above the score's projection is pushed into every branch
     * of the input's plan (a delta's union, its parquet scans), each
     * re-deriving the text and the score there. */
-  private def qualityGate(docs: DataFrame, minQuality: Double, textCol: String, idCol: String): DataFrame =
-    TextAnalysis.withQualitySignals(docs, textCol)
-      .select(col(idCol), col(textCol), col("quality_score"))
+  private[graft] def qualityGate(docs: DataFrame, minQuality: Double,
+      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+    qualityProjection(docs, textCol, idCol)
       .localCheckpoint(true)
       .filter(col("quality_score") >= minQuality)
       .select(col(idCol), col(textCol))

@@ -495,8 +495,6 @@ object Dedup {
       converged = isStarForest(next)
       edges = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $iter converged=$converged")
     }
     // Returning silently-unconverged labels would let downstream curation
     // keep/drop the WRONG documents with no signal — with O(log n)
@@ -965,7 +963,7 @@ object Dedup {
     * is the same exact-Jaccard pass as the self-join tiers, over the
     * union of the two signature-set frames.
     *
-    * Scale shape: identical to [[incrementalMinhashPairsWithIndex]] —
+    * Scale shape: identical to [[incrementalMinhashPairs]] —
     * only (id, band-key) longs shuffle for candidates, shingle sets
     * attach to deduped candidate pairs only, and the right side is
     * typically a PERSISTED index generation (train is never
@@ -1015,25 +1013,15 @@ object Dedup {
       delta: DataFrame, k: Int = 3, maxJaccardDist: Double = 0.3,
       numHashes: Int = 16, numBands: Int = 8, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame =
-    incrementalMinhashPairsWithIndex(histBands, histSets, delta, k,
+    incrementalMinhashPairsFull(histBands, histSets, delta, k,
       maxJaccardDist, numHashes, numBands, textCol, idCol)._1
 
   /** [[incrementalMinhashPairs]] plus the delta's own (bands, sets)
-    * index frames — for callers that persist the delta's index anyway
-    * ([[Curation.incrementalCurate]] appends the survivors' slice to
-    * its state), so the delta is shingled/signed/banded exactly ONCE
-    * per increment. */
-  def incrementalMinhashPairsWithIndex(histBands: DataFrame, histSets: DataFrame,
-      delta: DataFrame, k: Int = 3, maxJaccardDist: Double = 0.3,
-      numHashes: Int = 16, numBands: Int = 8, textCol: String = "text",
-      idCol: String = "doc_id"): (DataFrame, DataFrame, DataFrame) = {
-    val (p, b, st, _) = incrementalMinhashPairsFull(histBands, histSets, delta,
-      k, maxJaccardDist, numHashes, numBands, textCol, idCol)
-    (p, b, st)
-  }
-
-  /** [[incrementalMinhashPairsWithIndex]] plus the delta signature
-    * frame as an unpersist handle (see [[minhashIndexWithHandle]]). */
+    * index frames and its signature frame as an unpersist handle (see
+    * [[minhashIndexWithHandle]]) — for callers that persist the delta's
+    * index anyway ([[Curation.incrementalCurate]] appends the
+    * survivors' slice to its state), so the delta is
+    * shingled/signed/banded exactly ONCE per increment. */
   private[graft] def incrementalMinhashPairsFull(histBands: DataFrame, histSets: DataFrame,
       delta: DataFrame, k: Int = 3, maxJaccardDist: Double = 0.3,
       numHashes: Int = 16, numBands: Int = 8, textCol: String = "text",

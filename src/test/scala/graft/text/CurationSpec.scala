@@ -1,9 +1,10 @@
 package graft.text
 
 import org.apache.spark.JobCount
-import org.apache.spark.sql.CachedEntries
+import org.apache.spark.sql.{CachedEntries, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.bench.ExplainDump
 import graft.queries.DedupQueries
 
 class CurationSpec extends SparkSpec {
@@ -125,5 +126,20 @@ class CurationSpec extends SparkSpec {
     call() // builds the day-1 state, once per process
     val jobs = JobCount(spark.sparkContext, "curation-incremental-job-count")(call())
     assert(jobs > 0 && jobs <= 37, s"q_curation_incremental jobs: $jobs")
+  }
+
+  test("ExplainDump's stage 1 dumps are the projections the pipelines' quality cuts materialize") {
+    def stage1(stages: Seq[(String, DataFrame)]): DataFrame =
+      stages.collectFirst { case (name, df) if name.contains(" stage 1:") => df }.get
+    def sameAnalyzed(a: DataFrame, b: DataFrame): Boolean =
+      a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)
+    val docs = graft.Tables.documents(spark, sf001).select(col("doc_id"), col("text"))
+    assert(sameAnalyzed(stage1(ExplainDump.curationStages(spark, sf001)),
+      Curation.qualityProjection(DedupQueries.corpusTriple(spark, sf001))),
+      "q_curation stage 1 is not the plan under Curation.qualityGate's cut")
+    // built on the registered query's delta, not a hand-made one
+    assert(sameAnalyzed(stage1(ExplainDump.incrementalStages(spark, sf001)),
+      Curation.qualityProjection(DedupQueries.curationDelta(docs))),
+      "q_curation_incremental stage 1 is not the plan under the query's quality cut")
   }
 }
